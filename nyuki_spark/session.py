@@ -16,9 +16,29 @@ see FIXTURES.md):
 - AQE on (coalesce partitions + skew join) — at 100 TB this is what re-plans
   shuffles at runtime; at test scale it coalesces the tiny shuffles.
 
-Scale posture: shuffle partitions default to 32 on local[32] test rigs, but
-the factory honours ``NYUKI_SHUFFLE_PARTITIONS`` so a real cluster deployment
-sets it to ~2-3x total executor cores. AQE then coalesces/splits at runtime.
+Scale posture: shuffle partitions default to 32, and
+``NYUKI_SHUFFLE_PARTITIONS`` lets a real cluster deployment set ~2-3x total
+executor cores. AQE then coalesces or splits them at runtime, towards total
+shuffle bytes / ``defaultParallelism`` per partition but never above the
+64 MB advisory size. Two settings make that target follow the host's cores
+for small inputs too:
+
+- ``spark.sql.adaptive.coalescePartitions.minPartitionSize=64k``. Spark's
+  1 MB floor folded every shuffle under ~2 MB into one or two tasks. In
+  ``llm_ngram_jaccard_capped`` the ~1.5 MB ``groupBy(text)`` shuffle then
+  ran the shingle ``MapInPandas`` stage, its broadcast-join probe and a
+  ~1.2M-row partial count as one task while the other cores idled. At
+  100 TB the advisory size still decides, so large plans do not change.
+- ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true``.
+  Persisted plans are coalesced too. Without it the LSH ``groups`` of
+  ``llm_cosine_pairs`` kept 32 partitions of ~62 rows, and each
+  ``_buckets`` Arrow task paid Python worker set-up; the same held for the
+  hot-key census in ``operators/dedup.py``.
+
+On a 4-CPU, 15 GiB host (``perfbench/run.py --workload llm_dedup``, 10
+alternating pairs against the configuration without them) the three
+dedup-funnel ids went from 0.255 to 0.335 ops/s (median; +32%, every pair
+faster) and the median op from 2.94 s to 2.21 s, with identical results.
 """
 
 from __future__ import annotations
@@ -27,7 +47,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_session", "ENGINE_CONF"]
+__all__ = ["get_session", "driver_memory", "ENGINE_CONF"]
 
 # Configuration shared by every entry point (tests, bench, driver harness).
 ENGINE_CONF: dict[str, str] = {
@@ -37,6 +57,10 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Size small shuffles and persisted tables to the cores ("Scale
+    # posture" above).
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Dimension tables (region/nation/supplier/part at test SFs) stay under
     # this threshold -> broadcast hash joins without hints.
     "spark.sql.autoBroadcastJoinThreshold": "64MB",
@@ -45,14 +69,38 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.shuffle.partitions": os.environ.get("NYUKI_SHUFFLE_PARTITIONS", "32"),
     # Self-describing UI is useless headless; saves startup time.
     "spark.ui.enabled": "false",
-    # Builder-time only (configure_session skips non-spark.sql.* keys): in
-    # local mode the driver JVM IS the executor, and Spark's 1g default
-    # heap OOMs a 32-thread run long before the 128 GiB box is busy —
-    # observed on the r4 full-suite bench (streaming sliding-window Expand
-    # at sf0.1). Sized so the sf1 (6 M-row lineitem) validation also fits;
-    # a real cluster sets executor memory through spark-submit instead.
-    "spark.driver.memory": os.environ.get("NYUKI_DRIVER_MEMORY", "24g"),
 }
+
+
+def _mem_total_kib() -> int | None:
+    """``MemTotal`` from ``/proc/meminfo`` in KiB, or None off Linux."""
+    try:
+        with open("/proc/meminfo", encoding="ascii") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return None
+
+
+def driver_memory() -> str | None:
+    """The driver heap: ``NYUKI_DRIVER_MEMORY`` if set, else half of the
+    host's ``MemTotal``, or None (Spark's 1g default) where that is unknown.
+
+    In local mode the driver JVM is the executor, and Spark's 1g default
+    heap OOMs a multi-core run (streaming sliding-window Expand at sf0.1).
+    The heap may not take the whole host, though: the JVM's off-heap
+    buffers, one Arrow Python worker per core and the page cache live in
+    the other half. A real cluster sets executor memory through
+    spark-submit instead."""
+    override = os.environ.get("NYUKI_DRIVER_MEMORY")
+    if override:
+        return override
+    total_kib = _mem_total_kib()
+    if total_kib is None:
+        return None
+    return f"{total_kib // 2048}m"
 
 
 def _ship_worker_tuneup() -> None:
@@ -96,6 +144,10 @@ def get_session(
     if master is not None:
         builder = builder.master(master)
     conf = dict(ENGINE_CONF)
+    # Builder-time only: a running JVM's heap cannot change.
+    heap = driver_memory()
+    if heap is not None:
+        conf["spark.driver.memory"] = heap
     # r13 (VERDICT #5): state-store provider knob for the streaming
     # family. Default leaves Spark's HDFS-backed provider alone; set
     # NYUKI_STREAM_STATE_PROVIDER=rocksdb (or a full provider class name)
