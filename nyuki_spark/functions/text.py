@@ -262,6 +262,38 @@ def simhash60(text_col: Column | str, sep: str = " ") -> Column:
     return _simhash_vote_udf()(hashes)
 
 
+def _token_spans_kernel():
+    """The byte-span tokenizer of the Arrow text stages: ``spans(tb, n)``
+    takes one text's UTF-8 bytes and returns the (starts, ends) int64
+    arrays of its single-space-separated tokens, or None when it has
+    fewer than ``n`` tokens. Tokens are exactly ``text.split(" ")``: the
+    space byte never occurs inside a multibyte sequence, so one numpy
+    pass over the bytes finds every separator, and the gram of tokens
+    ``i .. i+n-1`` is the byte slice ``tb[starts[i]:ends[i+n-1]]`` — the
+    tokens joined by the separator, with no join.
+
+    Returned from a factory so the closure pickles by value (worker-side
+    unpickling must not import nyuki_spark). Callers keep their own
+    per-doc loop and per-gram step.
+    """
+    import numpy as np
+
+    def spans(tb: bytes, n: int):
+        seps = np.where(np.frombuffer(tb, dtype=np.uint8) == 32)[0]
+        n_tok = seps.size + 1
+        if n_tok < n:
+            return None
+        starts = np.empty(n_tok, dtype=np.int64)
+        ends = np.empty(n_tok, dtype=np.int64)
+        starts[0] = 0
+        starts[1:] = seps + 1
+        ends[:-1] = seps
+        ends[-1] = len(tb)
+        return starts, ends
+
+    return spans
+
+
 def word_ngrams(df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Distinct word n-gram shingles per document: (id, shingle) rows.
 
@@ -273,14 +305,12 @@ def word_ngrams(df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str
     a sequence+transform HOF (interpreted per gram, with O(n) element_at
     concats each) exploded and then GLOBALLY de-duplicated by a
     (id, shingle) exchange. Now a `mapInPandas` stage emits the identical
-    shingle set with zero string joins: tokens joined by the single-space
-    separator reconstruct the exact original character span, so each
-    shingle is a slice of the original text between separator positions
-    (found with one numpy pass over the UTF-8 bytes — the space byte
-    never occurs inside a multibyte sequence); per-doc set-dedup makes
-    the (id, shingle) rows distinct BY CONSTRUCTION, so the downstream
-    distinct exchange is gone from every consumer. Order of rows within a
-    doc is unspecified, as before (every consumer aggregates or joins).
+    shingle set with zero string joins: each shingle is a byte slice of
+    the original text (:func:`_token_spans_kernel`); per-doc set-dedup
+    makes the (id, shingle) rows distinct BY CONSTRUCTION, so the
+    downstream distinct exchange is gone from every consumer. Order of
+    rows within a doc is unspecified, as before (every consumer
+    aggregates or joins).
     """
     from pyspark.sql.types import StringType, StructField, StructType
 
@@ -288,9 +318,9 @@ def word_ngrams(df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str
     out_schema = StructType(
         [StructField(id_col, id_type), StructField("shingle", StringType())]
     )
+    spans = _token_spans_kernel()
 
     def _shingle_rows(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
@@ -299,19 +329,13 @@ def word_ngrams(df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str
                 if text is None:
                     continue
                 tb = text.encode("utf-8")
-                seps = np.where(np.frombuffer(tb, dtype=np.uint8) == 32)[0]
-                n_tok = seps.size + 1
-                if n_tok < n:
+                se = spans(tb, n)
+                if se is None:
                     continue
-                starts = np.empty(n_tok, dtype=np.int64)
-                ends = np.empty(n_tok, dtype=np.int64)
-                starts[0] = 0
-                starts[1:] = seps + 1
-                ends[:-1] = seps
-                ends[-1] = len(tb)
+                starts, ends = se
                 uniq = {
                     tb[starts[i] : ends[i + n - 1]]
-                    for i in range(n_tok - n + 1)
+                    for i in range(starts.size - n + 1)
                 }
                 out_sh.extend(s.decode("utf-8") for s in uniq)
                 out_id.extend([did] * len(uniq))

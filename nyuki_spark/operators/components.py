@@ -41,8 +41,6 @@ Scale notes (100 TB corpus):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,7 +50,7 @@ __all__ = ["connected_components", "dedup_by_components"]
 # driver hop is BOUNDED — two int64 columns × this many rows ≈ 16 MB via
 # Arrow, the same order as a broadcast-join build side under the session's
 # 64 MB autoBroadcastJoinThreshold). Above it the distributed loop runs.
-_DRIVER_MAX_EDGES = int(os.environ.get("NYUKI_CC_DRIVER_MAX_EDGES", "1000000"))
+_DRIVER_MAX_EDGES = 1_000_000
 
 
 def _driver_components(bidir: DataFrame):

@@ -16,9 +16,10 @@ Four tiers, cheapest first — a 100 TB corpus runs them as a funnel:
    MinHashLSH ``approxSimilarityJoin`` (band-bucket equi-join under the
    hood). Approximate-recall tier; seeded, so deterministic per run.
 4. **Exact n-gram Jaccard** (`ngram_jaccard_pairs`): the ground truth the
-   approximate tiers are measured against. Shingle-explode + self-join on
-   shingle + count ratio. Quadratic in the worst case — at scale it runs
-   only on LSH-candidate pairs (pass ``candidates``).
+   approximate tiers are measured against. Per-doc shingle sets (one
+   Arrow stage) + self-join on shingle + count ratio. Quadratic in the
+   worst case — at scale it runs only on LSH-candidate pairs (pass
+   ``candidates``).
 
 Embedding-space near-dup (`embedding_neardup_pairs`) closes the family:
 cosine similarity over ``array<float>`` columns, JVM-side fold (zip_with +
@@ -343,24 +344,14 @@ def _capped_shared_counts(
         )
     cold = sh.join(hot_keys, "shingle", "left_anti")
     hot = sh.join(hot_keys, "shingle", "left_semi")
-    a, b = cold.alias("a"), cold.alias("b")
-    s_cold = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("s_cold"))
-    )
+    s_cold = _all_shared_counts(cold, id_col)
     hcnt = hot.groupBy(id_col).agg(F.count(F.lit(1)).alias("h"))
     ha = hcnt.select(F.col(id_col).alias("id_a"), F.col("h").alias("ha"))
     hb = hcnt.select(F.col(id_col).alias("id_b"), F.col("h").alias("hb"))
     na_ = sizes.select(F.col(id_col).alias("id_a"), F.col("ns").alias("_na"))
     nb_ = sizes.select(F.col(id_col).alias("id_b"), F.col("ns").alias("_nb"))
+    # The cold count keeps the self-join's ``shared`` name until the
+    # final sum adds the hot part.
     bounded = (
         s_cold.join(na_, "id_a")
         .join(nb_, "id_b")
@@ -368,14 +359,14 @@ def _capped_shared_counts(
         .join(hb, "id_b", "left")
         .withColumn(
             "_smax",
-            F.col("s_cold")
+            F.col("shared")
             + F.least(
                 F.coalesce(F.col("ha"), F.lit(0)),
                 F.coalesce(F.col("hb"), F.lit(0)),
             ),
         )
         .where(bound_pred(F.col("_smax"), F.col("_na"), F.col("_nb")))
-        .select("id_a", "id_b", "s_cold")
+        .select("id_a", "id_b", "shared")
     )
     hot_shared = _pair_shared_counts(bounded, hot, id_col).withColumnRenamed(
         "shared", "s_hot"
@@ -383,7 +374,75 @@ def _capped_shared_counts(
     return bounded.join(hot_shared, ["id_a", "id_b"], "left").select(
         "id_a",
         "id_b",
-        (F.col("s_cold") + F.coalesce(F.col("s_hot"), F.lit(0))).alias("shared"),
+        (F.col("shared") + F.coalesce(F.col("s_hot"), F.lit(0))).alias("shared"),
+    )
+
+
+def _shingle_pair_funnel(
+    df: DataFrame,
+    metric,
+    name: str,
+    threshold: float,
+    n: int,
+    id_col: str,
+    text_col: str,
+    candidates: DataFrame | None,
+    df_cap: int | None,
+    require_lossless: bool,
+) -> DataFrame:
+    """The one body of the shingle-overlap pair operators: (id_a, id_b,
+    ``name``), id_a < id_b, where ``name`` = round(metric(shared, na,
+    nb), 4) >= ``threshold`` over the docs' word ``n``-gram sets.
+
+    Shingles -> per-doc set sizes -> shared counts (an explicit candidate
+    list, the df-capped funnel, or the plain self-join) -> size joins ->
+    score. ``metric(shared, na, nb) -> Column`` must be monotone
+    non-decreasing in ``shared``: the capped funnel's lossless prefilter
+    is the metric's threshold test at the shared upper bound.
+    """
+    # NOT materialized (r12 A/B): a localCheckpoint of the shingle table
+    # here REGRESSED the family (llm_ngram_jaccard 2.12 -> 2.37 s,
+    # llm_subset_containment 1.64 -> 2.53 s, llm_dedup_eval 3.53 -> 4.97 s
+    # isolated medians at sf0.1) — ReusedExchange already dedupes the
+    # repeated identical shingle subtrees inside the final job, so the
+    # checkpoint only added a serial block-manager write of the widest
+    # (string-heavy) table in the funnel.
+    sh = word_ngrams(df, n=n, id_col=id_col, text_col=text_col)
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("ns"))
+    if candidates is not None:
+        shared = _pair_shared_counts(candidates, sh, id_col)
+    elif df_cap is not None:
+        # Shared capped funnel (bounded nomination fanout C(df_cap, 2) per
+        # shingle + lossless monotone upper-bound prefilter + exact hot
+        # verification of the survivors — the r7 re-plan that took
+        # llm_ngram_jaccard_capped 24.5 s -> 4.25 s at sf0.1). The 5e-5
+        # slack covers the final filter's round-4 half-boundary (a true
+        # value of t - 0.00004 rounds UP to t and must survive the
+        # prefilter); slack only admits extra candidates, exact
+        # verification still decides.
+        shared = _capped_shared_counts(
+            sh,
+            sizes,
+            id_col,
+            df_cap,
+            lambda smax, na, nb: metric(smax, na, nb) >= threshold - 5e-5,
+            require_lossless=require_lossless,
+        )
+    else:
+        shared = _all_shared_counts(sh, id_col)
+    na = sizes.select(F.col(id_col).alias("id_a"), F.col("ns").alias("na"))
+    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("ns").alias("nb"))
+    return (
+        shared.join(na, "id_a")
+        .join(nb, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.round(metric(F.col("shared"), F.col("na"), F.col("nb")), 4).alias(
+                name
+            ),
+        )
+        .where(F.col(name) >= threshold)
     )
 
 
@@ -426,50 +485,9 @@ def ngram_jaccard_pairs(
         does not want. Uncapped (default) behavior is byte-identical to
         the exact oracle.
     """
-    # NOT materialized (r12 A/B): a localCheckpoint of the shingle table
-    # here REGRESSED the family (llm_ngram_jaccard 2.12 -> 2.37 s,
-    # llm_subset_containment 1.64 -> 2.53 s, llm_dedup_eval 3.53 -> 4.97 s
-    # isolated medians at sf0.1) — ReusedExchange already dedupes the
-    # repeated identical shingle subtrees inside the final job, so the
-    # checkpoint only added a serial block-manager write of the widest
-    # (string-heavy) table in the funnel.
-    sh = word_ngrams(df, n=n, id_col=id_col, text_col=text_col)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("ns"))
-    if candidates is not None:
-        shared = _pair_shared_counts(candidates, sh, id_col)
-    elif df_cap is not None:
-        # Shared capped funnel (bounded nomination fanout C(df_cap, 2) per
-        # shingle + lossless monotone upper-bound prefilter + exact hot
-        # verification of the survivors — the r7 re-plan that took this
-        # query 24.5 s -> 4.25 s at sf0.1). Jaccard's threshold test at
-        # the shared upper bound: smax / (na + nb - smax) >= t. The 5e-5
-        # slack covers the final filter's round-4 half-boundary (a true
-        # value of t - 0.00004 rounds UP to t and must survive the
-        # prefilter); slack only admits extra candidates, exact
-        # verification still decides.
-        shared = _capped_shared_counts(
-            sh,
-            sizes,
-            id_col,
-            df_cap,
-            lambda smax, na, nb: smax / (na + nb - smax) >= threshold - 5e-5,
-            require_lossless=require_lossless,
-        )
-    else:
-        shared = _all_shared_counts(sh, id_col)
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("ns").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("ns").alias("nb"))
-    return (
-        shared.join(na, "id_a")
-        .join(nb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")), 4
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
+    return _shingle_pair_funnel(
+        df, lambda s, na, nb: s / (na + nb - s), "jaccard", threshold, n,
+        id_col, text_col, candidates, df_cap, require_lossless,
     )
 
 
@@ -497,37 +515,9 @@ def containment_pairs(
     shared, so the prefilter loses nothing); uncapped default is the exact
     all-shared-shingle self-join for oracle verification only.
     """
-    # Not materialized — same ReusedExchange A/B as ngram_jaccard_pairs (r12).
-    sh = word_ngrams(df, n=n, id_col=id_col, text_col=text_col)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("ns"))
-    if candidates is not None:
-        shared = _pair_shared_counts(candidates, sh, id_col)
-    elif df_cap is not None:
-        # 5e-5 slack for the final round-4 filter boundary, as in
-        # ngram_jaccard_pairs.
-        shared = _capped_shared_counts(
-            sh,
-            sizes,
-            id_col,
-            df_cap,
-            lambda smax, na, nb: smax / F.least(na, nb) >= threshold - 5e-5,
-            require_lossless=require_lossless,
-        )
-    else:
-        shared = _all_shared_counts(sh, id_col)
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("ns").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("ns").alias("nb"))
-    return (
-        shared.join(na, "id_a")
-        .join(nb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("shared") / F.least(F.col("na"), F.col("nb")), 4
-            ).alias("containment"),
-        )
-        .where(F.col("containment") >= threshold)
+    return _shingle_pair_funnel(
+        df, lambda s, na, nb: s / F.least(na, nb), "containment", threshold, n,
+        id_col, text_col, candidates, df_cap, require_lossless,
     )
 
 

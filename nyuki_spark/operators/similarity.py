@@ -17,13 +17,16 @@ against brute force in tests/test_similarity.py).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+# Tile edge of the per-bucket pairwise pass in embedding_candidates_lsh:
+# O(block^2) float64 intermediates per tile (32 MB at 2048). Read at call
+# time, so a test can shrink it to force the tiled path.
+_GRAM_BLOCK = 2048
 
 __all__ = [
     "cosine_scores",
@@ -434,10 +437,10 @@ def embedding_candidates_lsh(
     # allocated O(n^2) doubles (plus an O(n^2) bool triu) in one Python
     # worker — an OOM at scale even though the group's O(n*d) embeddings
     # fit. Tiling bounds the pairwise intermediates to O(block^2) per tile
-    # (32 MB of float64 at the 2048 default) regardless of bucket size;
-    # the emitted pair set is bit-identical (same strict d2 < r2 on the
-    # same float64 operands, same upper-triangle enumeration).
-    gram_block = int(os.environ.get("NYUKI_LSH_GRAM_BLOCK", "2048"))
+    # (_GRAM_BLOCK) regardless of bucket size; the emitted pair set is
+    # bit-identical (same strict d2 < r2 on the same float64 operands,
+    # same upper-triangle enumeration).
+    gram_block = _GRAM_BLOCK
 
     def _bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         m = np.vstack(pdf["_e"].to_numpy()).astype(np.float64)

@@ -10,8 +10,9 @@ re-expression here keeps the same detection contract for spans of at least
 ``l`` tokens using only shuffle-friendly primitives:
 
 1. every document emits its token ``l``-grams as (doc, position, hash)
-   rows — a narrow map stage (``transform`` over a ``sequence``, one
-   ``posexplode``), shuffling a 16-hex-char hash instead of the gram text;
+   rows — a narrow Arrow ``mapInPandas`` stage that hashes byte slices of
+   the original text (the shared tokenizer of ``functions/text.py``),
+   shuffling a 16-hex-char hash instead of the gram text;
 2. grams whose hash appears in >= 2 *distinct* documents are duplicated —
    one hash-partitioned aggregate with map-side partial
    ``count(distinct)`` collapse;
@@ -36,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from nyuki_spark.functions.text import _token_spans_kernel
+
 __all__ = ["duplicated_substring_spans"]
 
 
@@ -44,13 +47,13 @@ def duplicated_substring_spans(
     l: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    sep: str = " ",
 ) -> DataFrame:
     """Maximal token spans of length >= ``l`` shared by >= 2 documents.
 
     Returns (id_col, start_pos, span_tokens): ``start_pos`` is the 0-based
     token offset of the span's first token, ``span_tokens`` its length in
-    tokens (= merged gram run + ``l`` - 1).
+    tokens (= merged gram run + ``l`` - 1). Tokens are split on a single
+    space, as ``text.split(" ")``.
     """
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
@@ -62,56 +65,41 @@ def duplicated_substring_spans(
             StructField("g", StringType()),
         ]
     )
-    sep_b = sep.encode()
-    if len(sep_b) != 1:
-        raise ValueError(
-            "duplicated_substring_spans requires a single-byte separator "
-            f"(got {sep!r}): the gram stage hashes byte spans of the "
-            "original text between separator positions"
-        )
+    spans = _token_spans_kernel()
 
     # r13 (VERDICT #4, guide §4.2): the gram stage was an interpreted HOF
     # (`transform(sequence, i -> substring(md5(concat_ws(slice(t,i,l)))))`)
     # — Spark never codegens HOF lambdas, and each element re-sliced and
     # re-concatenated l tokens (O(tokens * l) char copying per doc at
     # ~1 interpreted lambda call per gram). The Arrow stage computes the
-    # IDENTICAL hashes: tokens joined by the single-char separator
-    # reconstruct the exact original byte span (the separator is
-    # one UTF-8 byte that never occurs inside a multibyte sequence), so
-    # each gram md5 runs over a slice of the original UTF-8 bytes with no
-    # join at all; md5 hex prefix matches Spark's md5/substring contract.
-    # pos stays the 0-based posexplode index.
+    # IDENTICAL hashes: each gram md5 runs over a byte slice of the
+    # original UTF-8 text (:func:`_token_spans_kernel`) with no join at
+    # all; md5 hex prefix matches Spark's md5/substring contract. pos
+    # stays the 0-based posexplode index.
     def _gram_rows(batches):
         import hashlib
 
         import numpy as np
         import pandas as pd
 
+        md5 = hashlib.md5
         for pdf in batches:
             out_id, out_pos, out_g = [], [], []
             for did, text in zip(pdf[id_col], pdf[text_col]):
                 if text is None:
                     continue
                 tb = text.encode("utf-8")
-                seps = np.where(
-                    np.frombuffer(tb, dtype=np.uint8) == sep_b[0]
-                )[0]
-                n_tok = seps.size + 1
-                if n_tok < l:
+                se = spans(tb, l)
+                if se is None:
                     continue
-                starts = np.empty(n_tok, dtype=np.int64)
-                ends = np.empty(n_tok, dtype=np.int64)
-                starts[0] = 0
-                starts[1:] = seps + 1
-                ends[:-1] = seps
-                ends[-1] = len(tb)
-                md5 = hashlib.md5
-                for i in range(n_tok - l + 1):
+                starts, ends = se
+                m = starts.size - l + 1
+                for i in range(m):
                     out_g.append(
                         md5(tb[starts[i] : ends[i + l - 1]]).hexdigest()[:16]
                     )
-                out_id.extend([did] * (n_tok - l + 1))
-                out_pos.extend(range(n_tok - l + 1))
+                out_id.extend([did] * m)
+                out_pos.extend(range(m))
             yield pd.DataFrame(
                 {
                     id_col: pd.Series(out_id),

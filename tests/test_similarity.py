@@ -96,19 +96,19 @@ def test_lsh_giant_bucket_tiled_pairs_identical(spark, sf_dir, monkeypatch):
     same float64 operands); (c) the degenerate buckets really did exceed
     the tile, so the tiled path was exercised.
     """
-    from nyuki_spark.operators.similarity import embedding_candidates_lsh
+    import nyuki_spark.operators.similarity as S
 
     emb = load_table(spark, sf_dir, "embeddings")
 
-    def pairs(block: str) -> set:
-        monkeypatch.setenv("NYUKI_LSH_GRAM_BLOCK", block)
-        got = embedding_candidates_lsh(
+    def pairs(block: int) -> set:
+        monkeypatch.setattr(S, "_GRAM_BLOCK", block)
+        got = S.embedding_candidates_lsh(
             emb, sim_floor=0.35, bucket_length=1e9, num_hash_tables=2
         ).collect()
         return {(r.id_a, r.id_b) for r in got}
 
-    tiled = pairs("7")
-    assert tiled == pairs("1000000")
+    tiled = pairs(7)
+    assert tiled == pairs(1_000_000)
 
     import numpy as np
 
